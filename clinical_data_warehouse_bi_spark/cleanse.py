@@ -40,20 +40,13 @@ def sentinel_timestamp(col: Column | str, sentinel: str = SENTINEL_LOW) -> Colum
 def keyword_filter(col: Column | str, keywords: list[str]) -> Column:
     """P3: OR-chain of LIKE '%kw%' over a lowercased column.
 
-    Catalyst folds this into a single predicate pushed to the scan;
-    at scale prefer one `rlike("kw1|kw2|...")` (same pushdown, one
-    regex eval) — both forms provided for parity + performance.
+    Catalyst folds this into a single predicate pushed to the scan.
     """
     c = F.lower(F.col(col) if isinstance(col, str) else col)
     pred = F.lit(False)
     for kw in keywords:
         pred = pred | c.like(f"%{kw.lower()}%")
     return pred
-
-
-def keyword_filter_rlike(col: Column | str, keywords: list[str]) -> Column:
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    return c.rlike("|".join(kw.lower() for kw in keywords))
 
 
 def regex_guarded_numeric(col: Column | str, target: str = "decimal(10,2)") -> Column:

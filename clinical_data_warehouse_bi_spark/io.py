@@ -186,15 +186,6 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(target, *keys) if keys else df.repartition(target)
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = DRIVER_TABLES
-) -> None:
-    """Register each table as a temp view so operators can be written
-    in Spark SQL when that is clearer than the DataFrame API."""
-    for name in names:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_source(
     spark: SparkSession,
     path: str,
@@ -409,11 +400,6 @@ def mix_sources(
     if out is None:
         raise ValueError("mix_sources needs at least one source")
     return out
-
-
-def show_tables(spark: SparkSession) -> DataFrame:
-    """S7 catalog listing (DWH.sql:215 `SHOW TABLES`)."""
-    return spark.sql("SHOW TABLES")
 
 
 def reset_database(spark: SparkSession, name: str) -> None:

@@ -44,6 +44,7 @@ SQL_AGG_PER_ORDER = """
     """
 
 
+@register("q_agg_per_order", oracle=SQL_AGG_PER_ORDER)
 def q_agg_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2 — `agg_disorders_per_admission` (DWH.sql:203-210):
     COUNT(*) + 2x COUNT(DISTINCT) grouped by admission, mapped to
@@ -370,6 +371,7 @@ SQL_KEYWORD_FILTER = """
     """
 
 
+@register("q_keyword_filter", oracle=SQL_KEYWORD_FILTER)
 def q_keyword_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3/F2/F3 — OR-chain LIKE over lowered strings (the concept-dim
     keyword extract, Stage_area.sql:92-95). Predicate is folded and
@@ -384,32 +386,6 @@ def q_keyword_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_tables(spark, sf_dir, ("part",))["part"]
     return p.select("p_partkey", "p_name", "p_type").filter(
         cleanse.keyword_filter("p_type", ["promo", "economy", "standard"])
-    )
-
-
-def q_null_reject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1/P2/P4 — project + rename + NULL-rejection in one pass
-    (Stage_area.sql:27-29 `subject_id AS patient_id`, 183-185). One
-    query carries all three trivial projection operators (registry cap
-    consolidation: the former q_project_rename was this same
-    select/alias shape on `customer`); column pruning + the NOT NULL
-    predicates both reach the parquet scan.
-
-    Round-5 registry retirement (cap is 50; the slot went to
-    q_ann_ivf_learned): every operator here is strictly subsumed by
-    q_multi_source_union's branches — each branch projects, renames
-    (`l_orderkey AS source_id`), and NULL-rejects with the same
-    pushdown-checked shapes, hash-verified against its oracle. Kept
-    unregistered for the narrow-API form."""
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return ev.filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("props").isNotNull()
-    ).select(
-        F.col("event_id").alias("evt_id"),
-        F.col("user_id").alias("patient_id"),
-        F.col("ts").alias("event_ts"),
     )
 
 
@@ -460,6 +436,7 @@ SQL_SENTINEL_TIMESTAMPS = """
     """
 
 
+@register("q_sentinel_timestamps", oracle=SQL_SENTINEL_TIMESTAMPS)
 def q_sentinel_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7/F1/F5 — CASE WHEN NULL-or-blank -> sentinel timestamp else
     cast (Stage_area.sql:41-48, 62-69). The nullable/blank raw column
@@ -497,6 +474,7 @@ SQL_CALENDAR_DIM = """
     """
 
 
+@register("q_calendar_dim", oracle=SQL_CALENDAR_DIM)
 def q_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9-F13/P6/A7 — the timestamp-grain dim_date build
     (Stage_area.sql:289-301): DISTINCT fact timestamps + derived
@@ -531,6 +509,7 @@ SQL_DUP_PROBE = """
     """
 
 
+@register("q_dup_probe", oracle=SQL_DUP_PROBE)
 def q_dup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5/A6 + O1 — GROUP BY ... HAVING count(*)>1 duplicate detection
     (QA.sql:124-176) ranked to the top-10 offenders (LIMIT,
@@ -572,6 +551,7 @@ SQL_SURROGATE_KEY = """
     """
 
 
+@register("q_surrogate_key", oracle=SQL_SURROGATE_KEY)
 def q_surrogate_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — ROW_NUMBER() OVER () surrogate key (Stage_area.sql:58).
     Deterministic ORDER BY replaces MariaDB's insertion order. This
@@ -690,6 +670,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register("q_approx_stats")
 def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB sketch surface in one query (registry cap
     consolidation of the former q_agg_per_order_approx +
@@ -837,6 +818,7 @@ SQL_GROUPED_PERCENTILES = """
     """
 
 
+@register("q_grouped_percentiles", oracle=SQL_GROUPED_PERCENTILES)
 def q_grouped_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles PER GROUP via
     percentiles.grouped_percentiles — the grouped companion of the
@@ -901,6 +883,7 @@ SQL_STRATIFIED_SAMPLE = f"""
     """
 
 
+@register("q_stratified_sample", oracle=SQL_STRATIFIED_SAMPLE)
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling — the training-mix shaping
     op: keep each row iff uniform_hash(id) < rate(stratum), with

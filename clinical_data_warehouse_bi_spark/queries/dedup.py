@@ -69,6 +69,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_MINHASH_LSH_PAIRS = _SQL_LSH_PAIRS
 
 
+@register("q_minhash_lsh_pairs", oracle=SQL_MINHASH_LSH_PAIRS)
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH candidate pairs: band the 16-hash signature into
     4 bands x 4 rows, bucket-join on (band_id, band-signature md5),
@@ -81,8 +82,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     over md5 hex is a valid uniform MinHash family and
     engine-portable) is this query's first stage; the former
     standalone q_minhash_signatures entry was retired as subsumed
-    (registry cap consolidation) — text.minhash_signatures remains
-    the narrow API.
+    (registry cap consolidation).
 
     Round-9 registry retirement (cap is 50; slot went to
     q_grouped_percentiles): the registered q_lsh_near_dup is a strict
@@ -117,6 +117,7 @@ SQL_NGRAM_JACCARD = f"""
     """
 
 
+@register("q_ngram_jaccard", oracle=SQL_NGRAM_JACCARD)
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard similarity for every pair sharing at least
     one shingle (bounded to doc_id < 200 — the exact-pairwise form is
@@ -321,6 +322,7 @@ SQL_SIMHASH_PAIRS = f"""
     """
 
 
+@register("q_simhash_pairs", oracle=SQL_SIMHASH_PAIRS)
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pair extraction — the consumer that makes the
     fingerprints a dedup tool (the exact-dup twin is the DISTINCT
@@ -431,6 +433,7 @@ SQL_CHUNK_DEDUP = f"""
     """
 
 
+@register("q_chunk_dedup", oracle=SQL_CHUNK_DEDUP)
 def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-document exact dedup with document reconstruction — the
     paragraph/line-level dedup every large corpus build runs (Lee et
@@ -555,6 +558,7 @@ SQL_PARAGRAPH_DEDUP = """
     """
 
 
+@register("q_paragraph_dedup", oracle=SQL_PARAGRAPH_DEDUP)
 def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boundary-based unit dedup with reconstruction
     (text.paragraph_dedup) — the delimiter-bounded sibling of
@@ -697,6 +701,7 @@ SQL_REPEATED_SPANS = f"""
     """
 
 
+@register("q_repeated_spans", oracle=SQL_REPEATED_SPANS)
 def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated n-gram SPAN removal
     (text.remove_repeated_spans, the arXiv:2107.06499 shape) — the

@@ -181,6 +181,7 @@ SQL_ANTI_NEW_DATES = """
     """
 
 
+@register("q_anti_new_dates", oracle=SQL_ANTI_NEW_DATES)
 def q_anti_new_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8 — insert-if-absent anti-join (the dim_date top-up,
     Stage_area.sql:299-301 / DWH.sql:134-135): distinct new keys with
@@ -215,6 +216,7 @@ SQL_SEMI_VALID_FACT = """
     """
 
 
+@register("q_semi_valid_fact", oracle=SQL_SEMI_VALID_FACT)
 def q_semi_valid_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J10/J11 keep-side — semi-join: fact rows whose FK matches a
     (filtered) dim (the recompute form of DWH.sql:150-152's
@@ -273,6 +275,7 @@ SQL_INSERT_IF_ABSENT = """
     """
 
 
+@register("q_insert_if_absent", oracle=SQL_INSERT_IF_ABSENT)
 def q_insert_if_absent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9/S4 — conditional fallback-row insert via NOT EXISTS
     (DWH.sql:138-144 'Unknown concept'; Stage_area.sql:112-113 the
@@ -311,6 +314,7 @@ SQL_SCALAR_LOOKUP_DEFAULT = """
     """
 
 
+@register("q_scalar_lookup_default", oracle=SQL_SCALAR_LOOKUP_DEFAULT)
 def q_scalar_lookup_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J12/M2/P8 — scalar-subquery default: unmatched lookups get a
     looked-up constant (Stage_area.sql:225-231 'Unknown concept'
@@ -356,6 +360,7 @@ SQL_RANGE_JOIN = """
     """
 
 
+@register("q_range_join", oracle=SQL_RANGE_JOIN)
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure range join (NO equi key): every lineitem shipped within a
     week of each probe order's date. Naive Spark plans this as a

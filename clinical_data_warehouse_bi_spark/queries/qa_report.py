@@ -94,6 +94,7 @@ SQL_QA_ROWCOUNT = """
     """
 
 
+@register("q_qa_rowcount_report", oracle=SQL_QA_ROWCOUNT)
 def q_qa_rowcount_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/F14/U1 — row-count reconciliation (QA.sql:13-59): per-table
     total vs distinct-key counts with a diff column (stage-vs-DWH
@@ -154,6 +155,7 @@ SQL_QA_AGG_CONSISTENCY = """
     """
 
 
+@register("q_qa_agg_consistency", oracle=SQL_QA_AGG_CONSISTENCY)
 def q_qa_agg_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/F14 — fact-vs-aggregate consistency (QA.sql:67-71):
     COUNT(*) of the fact == SUM(total_events) of the pre-agg table;
@@ -461,8 +463,9 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict item 1) after three rounds as the staged named
     candidate; slot freed by retiring q_calendar_dim (witnesses in
     its docstring). The full oracle comparison against SQL_BENFORD
-    also stays in tests/test_retired_parity.py, and the
-    digit-law value checks in tests/test_properties.py. Probabilities
+    runs in tests/test_oracle_parity.py, or in
+    tests/test_retired_parity.py's donor check in rounds it sits out;
+    the digit-law value checks live in tests/test_properties.py. Probabilities
     quantized decimal(28,12)->string per the cross-engine convention.
 
     Digit derivation is the EXACT integer path (``int_scale=2``:
@@ -518,7 +521,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     key the slow way. REGISTERED round 12 (round-11 verdict item 1);
     slot freed by retiring q_stream_dedup_dual (witnesses in its
     docstring). The full oracle comparison against SQL_SKEW_REPORT
-    also stays in tests/test_retired_parity.py.
+    runs in tests/test_oracle_parity.py with the rest of the gate.
 
     Quantization: share is floor(n/total * 1e9 + 0.5) BIGINT — n and
     total are exact integers, the division is one IEEE op, and floor
@@ -591,7 +594,8 @@ def q_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     check when a dashboard flatlines. REGISTERED round 12 (round-11
     verdict item 1); slot freed by retiring q_scalar_lookup_default
     (witnesses in its docstring). The full oracle comparison against
-    SQL_FRESHNESS also stays in tests/test_retired_parity.py.
+    SQL_FRESHNESS runs in tests/test_oracle_parity.py with the rest of
+    the gate.
 
     Cross-engine notes: as_of is an explicit literal (the repo's
     reproducibility rule — never now()); the lag mirrors Spark's
@@ -619,8 +623,8 @@ def q_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round-12 registration: row-level snapshot diff. Slot freed by
 # retiring q_anti_new_dates (witnesses in its docstring,
-# queries/join_ops.py). The full oracle comparison also stays in
-# tests/test_retired_parity.py (sf0.01 + sf0.1 sweep).
+# queries/join_ops.py). Its full oracle comparison runs in
+# tests/test_oracle_parity.py with the rest of the gate.
 # ---------------------------------------------------------------------------
 
 #: key shift for the demo's simulated late-arriving rows — above any

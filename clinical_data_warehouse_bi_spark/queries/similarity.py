@@ -81,6 +81,7 @@ SQL_COSINE_TOPK = f"""
     """
 
 
+@register("q_cosine_topk", oracle=SQL_COSINE_TOPK)
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k ANN baseline: each of the first
     {N_QUERIES} vectors against the whole table, scored by the
@@ -240,6 +241,7 @@ SQL_ANN_IVF_NPROBE = f"""
     """
 
 
+@register("q_ann_ivf_nprobe", oracle=SQL_ANN_IVF_NPROBE)
 def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with multi-bucket probing (nprobe={NPROBE}): each query
     searches its {NPROBE} nearest centroid buckets instead of one —
@@ -336,6 +338,7 @@ def _quantizer_key(spark: SparkSession, sf_dir: str, *params) -> tuple:
     return (spark.sparkContext.applicationId, sf_dir, *params)
 
 
+@register("q_ann_ivf_learned")
 def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over a LEARNED index, end-to-end: KMeans centroids
     (similarity.kmeans_ivf_index) bucket every vector, each query
@@ -356,8 +359,8 @@ def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving contract; the learned-vs-arbitrary recall property and
     the probe-machinery cross-engine hash check (retired
     q_ann_ivf_nprobe) stay live in tests/test_similarity_engine.py
-    and tests/test_retired_parity.py. Still benched via direct
-    import (the bench.py convention).
+    and tests/test_retired_parity.py. Still benched (its catalog row
+    keeps the bench role).
 
     No oracle BY DESIGN: k-means is iterative/seeded, so no portable
     SQL reproduces its centroids; the driver records the rows-only
@@ -479,6 +482,7 @@ SQL_EMBED_QUANTIZE = """
     """
 
 
+@register("q_embed_quantize", oracle=SQL_EMBED_QUANTIZE)
 def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization — the storage/transport
     op a training pipeline applies to embedding shards (4x smaller,
@@ -801,6 +805,7 @@ HNSW_ROUTED_CLUSTERS = 8
 HNSW_PROBE_CLUSTERS = 2
 
 
+@register("q_ann_hnsw_routed")
 def q_ann_hnsw_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph ANN served through the ROUTED tier (round-13 verdict
     item 3; hnsw.build_routed_hnsw_index + hnsw_routed_search):

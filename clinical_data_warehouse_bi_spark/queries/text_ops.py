@@ -40,6 +40,7 @@ SQL_TEXT_STATS = f"""
     """
 
 
+@register("q_text_stats", oracle=SQL_TEXT_STATS)
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + document statistics: whitespace/alnum token
     count, a BPE-ish regex token count (letters runs | single digits |
@@ -148,6 +149,7 @@ SQL_LANG_ID = f"""
     """
 
 
+@register("q_lang_id", oracle=SQL_LANG_ID)
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: count stopword-lexicon hits per
     language, argmax per document (ties broken alphabetically).
@@ -416,18 +418,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: BPE geometry for the registered encode: enough merges that real
-#: multi-character tokens win (the corpus vocabulary is ~40 words),
-#: few enough that training is a sub-second driver loop at any sf
-#: (the histogram, not the corpus, bounds the loop)
-BPE_MERGES = 64
-#: fitted-merge-table memo per (application, sf_dir) — the quantizer
-#: convention (queries/similarity.py): a production tokenizer trains
-#: once and encodes many corpora; refitting per query would
-#: misrepresent the operator's cost
-_BPE_CACHE: dict[tuple, list] = {}
-
-
 #: PINNED merge table for the registered q_bpe_encode (round-16
 #: verdict item 4: converting the gate from rows-only to
 #: value-checked requires the oracle to know the merges, and
@@ -436,8 +426,7 @@ _BPE_CACHE: dict[tuple, list] = {}
 #: corpus). Provenance: bpe.train_bpe over the sf0.001 documents
 #: histogram at n_merges=64, deterministic (lexicographic
 #: tie-break); regenerate with scripts shown in SURVEY.md round-16
-#: log. Corpus-FITTED training stays exercised by tests/test_bpe.py
-#: and the q_bpe_encode_fitted form below.
+#: log. Corpus-FITTED training stays exercised by tests/test_bpe.py.
 BPE_GATE_MERGES: list[tuple[str, str]] = [
     ('e', 'r'), ('e', '</w>'), ('n', '</w>'), ('o', 'r'), ('t', '</w>'),
     ('er', '</w>'), ('o', 'w'), ('ow', '</w>'), ('l', 'u'), ('i', 'n'),
@@ -523,7 +512,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_sql_bpe_encode) — the real mapInPandas encoder vs an
     independent SQL reimplementation, hash-compared. Corpus-FITTED
     merge learning (histogram -> train_bpe) stays exercised through
-    q_bpe_encode_fitted, bench, and tests/test_bpe.py.
+    tests/test_bpe.py.
 
     Scale shape: encoding is a pure map with a per-batch word cache —
     no shuffle, no per-row Python, Arrow batches in and out."""
@@ -533,35 +522,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = bpe.bpe_encode(
         fan_out(docs.select("doc_id", "text")), BPE_GATE_MERGES
     )
-    return enc.select(
-        "doc_id",
-        F.col("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
-        F.array_join("bpe_tokens", " ").alias("bpe_text"),
-    )
-
-
-def q_bpe_encode_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus-FITTED form (the registered entry through round
-    15): ONE histogram job (bpe.word_histogram), the deterministic
-    driver-side merge-learning loop (bpe.train_bpe — vocabulary-
-    sized, not corpus-sized), then the same distributed encode.
-    Unregistered since the round-16 value-check conversion pinned the
-    gate's merges; kept for bench/scale probes and as the
-    production-shaped API (train once, encode many corpora — the
-    _BPE_CACHE memo)."""
-    from clinical_data_warehouse_bi_spark import bpe
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    ck = (spark.sparkContext.applicationId, sf_dir, BPE_MERGES)
-    merges = _BPE_CACHE.get(ck)
-    if merges is None:
-        hist = [
-            (r.word, r.n)
-            for r in bpe.word_histogram(docs).orderBy("word").collect()
-        ]
-        merges = bpe.train_bpe(hist, n_merges=BPE_MERGES)
-        _BPE_CACHE[ck] = merges
-    enc = bpe.bpe_encode(fan_out(docs.select("doc_id", "text")), merges)
     return enc.select(
         "doc_id",
         F.col("n_bpe_tokens").cast("bigint").alias("n_bpe_tokens"),
@@ -585,6 +545,7 @@ SQL_QUOTA_SAMPLE = f"""
     """
 
 
+@register("q_quota_sample", oracle=SQL_QUOTA_SAMPLE)
 def q_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quota cap (text.quota_sample) — the C4/RefinedWeb
     domain-capping step: keep at most {QUOTA_PER_SOURCE} documents
@@ -981,8 +942,8 @@ def q_vocabulary_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Round-12 registration: per-document TF-IDF keyword extraction.
 # Slot freed by retiring q_simhash_pairs (witnesses in its
-# docstring, queries/dedup.py). The full oracle comparison also
-# stays in tests/test_retired_parity.py (sf0.01 + sf0.1 sweep).
+# docstring, queries/dedup.py). Its full oracle comparison runs in
+# tests/test_oracle_parity.py with the rest of the gate.
 # ---------------------------------------------------------------------------
 
 #: keywords per document for the staged demo

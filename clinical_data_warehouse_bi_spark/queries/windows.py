@@ -24,6 +24,7 @@ SQL_WINDOW_TUMBLING = """
     """
 
 
+@register("q_window_tumbling", oracle=SQL_WINDOW_TUMBLING)
 def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window aggregation (batch dual of
     streaming.windowed_counts — identical groupBy(window(...))).
@@ -145,6 +146,7 @@ SQL_FRAME_SAMPLE = """
     """
 
 
+@register("q_frame_sample", oracle=SQL_FRAME_SAMPLE)
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video/audio frame-sampling plan at 20 fps over the fake media
     column (duration_s = text length / 1000, attach_fake_media's
@@ -174,6 +176,7 @@ SQL_STREAM_DEDUP_DUAL = """
     """
 
 
+@register("q_stream_dedup_dual", oracle=SQL_STREAM_DEDUP_DUAL)
 def q_stream_dedup_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch dual of streaming.dedup_events, value-checked: simulate
     an at-least-once source by replaying every 10th event, then run
@@ -287,6 +290,7 @@ SQL_SCD2_DIM = """
     """
 
 
+@register("q_scd2_dim", oracle=SQL_SCD2_DIM)
 def q_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type 2 build — the warehouse op the
     reference's BI audience reaches for next: turn an event history
@@ -422,6 +426,7 @@ SQL_FUNNEL_STEPS = """
     """
 
 
+@register("q_funnel_steps", oracle=SQL_FUNNEL_STEPS)
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered-sequence funnel (funnel.funnel_steps): per user, the
     earliest-completion timestamps of view -> click -> purchase with
@@ -462,6 +467,7 @@ SQL_COHORT_RETENTION = """
     """
 
 
+@register("q_cohort_retention", oracle=SQL_COHORT_RETENTION)
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix (funnel.cohort_retention) — the other
     canonical ordered-behavior BI rollup next to the funnel: users
@@ -513,6 +519,7 @@ SQL_RESAMPLE_FILL = """
     """
 
 
+@register("q_resample_fill", oracle=SQL_RESAMPLE_FILL)
 def q_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key time-series regularization (timeseries.resample_fill):
     one row per user per day from each user's first to last event,
@@ -559,6 +566,7 @@ SQL_READMISSION_GAP = """
     """
 
 
+@register("q_readmission_gap", oracle=SQL_READMISSION_GAP)
 def q_readmission_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-day repeat-event rate via kpi.readmission_rate — the
     clinical KPI pack's flagship measure (CMS 30-day all-cause

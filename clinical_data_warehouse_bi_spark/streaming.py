@@ -1069,28 +1069,6 @@ def phash_ingest_batch(
     hashes.write.mode("append").parquet(index_path)
 
 
-def streaming_phash_ingest(
-    media: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    max_hamming: int | None = None,
-    real_decode: bool = False,
-    checkpoint_dir: str | None = None,
-):
-    """Streaming perceptual image near-dup detection: maintain the
-    (doc_id, phash) index incrementally and emit Hamming-radius pairs
-    per micro-batch (phash_ingest_batch) — the multimodal face of
-    streaming_near_dup. Returns the started StreamingQuery."""
-    writer = media.writeStream.foreachBatch(
-        lambda b, _id: phash_ingest_batch(
-            b, index_path, pairs_path, max_hamming, real_decode
-        )
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
-
-
 def streaming_graph_ingest(
     vectors: DataFrame,
     index_path: str,
@@ -2054,22 +2032,6 @@ def read_census(spark: SparkSession, synopsis_path: str) -> DataFrame:
     return syn.groupBy("unit", "census_date").agg(
         F.countDistinct("patient").alias("census")
     )
-
-
-def streaming_census(
-    stays: DataFrame,
-    synopsis_path: str,
-    checkpoint_dir: str | None = None,
-    **cols,
-):
-    """Maintain the census synopsis from a transfers stream
-    (foreachBatch over census_apply_batch)."""
-    writer = stays.writeStream.foreachBatch(
-        lambda b, bid: census_apply_batch(b, synopsis_path, bid, **cols)
-    ).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
 
 
 def compact_census(spark: SparkSession, synopsis_path: str) -> dict:

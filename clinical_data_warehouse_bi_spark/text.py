@@ -112,25 +112,6 @@ def minhash_wide(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_seeds: int = MINHASH_SEEDS,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(doc_id, seed, minhash): minhash = min over the doc's shingles
-    of md5(seed || ':' || shingle). Lexicographic min over md5 hex is
-    a valid uniform MinHash family and is engine-portable. Computed
-    via minhash_wide + a shuffle-free stack() unpivot."""
-    wide = minhash_wide(docs, id_col, text_col, num_seeds, shingle_n)
-    stack_args = ", ".join(f"{i}, mh{i}" for i in range(num_seeds))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({num_seeds}, {stack_args}) AS (seed, minhash)"),
-    ).select("doc_id", F.col("seed").cast("int"), "minhash")
-
-
 def lsh_band_signatures_wide(
     wide: DataFrame, num_seeds: int = MINHASH_SEEDS, bands: int = MINHASH_BANDS
 ) -> DataFrame:
@@ -146,20 +127,6 @@ def lsh_band_signatures_wide(
         "doc_id",
         F.expr(f"stack({bands}, {', '.join(exprs)}) AS (band_id, band_sig)"),
     ).select("doc_id", F.col("band_id").cast("int"), "band_sig")
-
-
-def lsh_band_signatures(minhash: DataFrame, bands: int = MINHASH_BANDS) -> DataFrame:
-    """(doc_id, band_id, band_sig) from the UNPIVOTED signature
-    matrix (kept for API parity; prefer lsh_band_signatures_wide)."""
-    banded = minhash.withColumn(
-        "band_id", F.floor(F.col("seed") / F.lit(MINHASH_SEEDS // bands)).cast("int")
-    )
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("seed", "minhash"))), lambda x: x["minhash"]
-    )
-    return banded.groupBy("doc_id", "band_id").agg(
-        F.md5(F.array_join(ordered, "|")).alias("band_sig")
-    )
 
 
 def lsh_candidate_pairs(band_sigs: DataFrame) -> DataFrame:

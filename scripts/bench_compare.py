@@ -1,10 +1,10 @@
 """Per-query Spark-vs-DuckDB wall-clock comparison (the BASELINE.md
 performance table).
 
-For every query in the bench headline set: run the Spark plan to a
-noop sink (warm-up + timed) and the DuckDB oracle to a fetch-all
-(warm-up + timed), print a ratio table, and emit one JSON line for
-tooling.
+For every query in the bench set (the catalog's bench rows): run
+the Spark plan to a noop sink (warm-up + timed) and the DuckDB oracle
+to a fetch-all (warm-up + timed), print a ratio table, and emit one
+JSON line for tooling.
 
 With --update-baseline, the per-query table is also WRITTEN into
 BASELINE.md between the BENCH_COMPARE markers (created on first
@@ -24,7 +24,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from clinical_data_warehouse_bi_spark.registry import registered_oracles, registered_queries
+from clinical_data_warehouse_bi_spark.registry import (
+    catalog_oracles,
+    catalog_queries,
+    names_with,
+)
 from clinical_data_warehouse_bi_spark.session import get_spark
 from scripts.check_parity import duck_con
 
@@ -109,115 +113,10 @@ def main() -> None:
     argv = [a for a in sys.argv[1:] if a != "--update-baseline"]
     write_baseline = "--update-baseline" in sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
-    from bench import BENCH_QUERIES
-
-    names = argv[1:] or BENCH_QUERIES
+    names = argv[1:] or names_with("bench")
     spark = get_spark("bench-compare")
     con = duck_con(sf_dir)
-    # registry-retired operators stay comparable: resolve their
-    # functions and preserved oracle SQL directly (bench.py keeps
-    # them in the headline set for historical continuity)
-    from clinical_data_warehouse_bi_spark.queries.core import (
-        SQL_AGG_PER_ORDER,
-        SQL_CALENDAR_DIM,
-        SQL_GROUPED_PERCENTILES,
-        SQL_SENTINEL_TIMESTAMPS,
-        q_agg_per_order,
-        q_approx_stats,
-        q_calendar_dim,
-        q_grouped_percentiles,
-        q_sentinel_timestamps,
-    )
-    from clinical_data_warehouse_bi_spark.queries.dedup import (
-        SQL_MINHASH_LSH_PAIRS,
-        SQL_PARAGRAPH_DEDUP,
-        SQL_REPEATED_SPANS,
-        SQL_SIMHASH_PAIRS,
-        q_minhash_lsh_pairs,
-        q_paragraph_dedup,
-        q_repeated_spans,
-        q_simhash_pairs,
-    )
-    from clinical_data_warehouse_bi_spark.queries.join_ops import (
-        SQL_ANTI_NEW_DATES,
-        SQL_RANGE_JOIN,
-        q_anti_new_dates,
-        q_range_join,
-    )
-    from clinical_data_warehouse_bi_spark.queries.similarity import (
-        SQL_COSINE_TOPK,
-        q_ann_hnsw_routed,
-        q_ann_ivf_learned,
-        q_cosine_topk,
-    )
-    from clinical_data_warehouse_bi_spark.queries.text_ops import (
-        SQL_QUOTA_SAMPLE,
-        q_quota_sample,
-    )
-    from clinical_data_warehouse_bi_spark.queries.windows import (
-        SQL_COHORT_RETENTION,
-        SQL_FRAME_SAMPLE,
-        SQL_FUNNEL_STEPS,
-        SQL_READMISSION_GAP,
-        SQL_RESAMPLE_FILL,
-        SQL_SCD2_DIM,
-        SQL_STREAM_DEDUP_DUAL,
-        q_cohort_retention,
-        q_frame_sample,
-        q_funnel_steps,
-        q_readmission_gap,
-        q_resample_fill,
-        q_scd2_dim,
-        q_stream_dedup_dual,
-    )
-
-    queries = {
-        **registered_queries(),
-        "q_approx_stats": q_approx_stats,
-        "q_sentinel_timestamps": q_sentinel_timestamps,
-        "q_paragraph_dedup": q_paragraph_dedup,
-        "q_range_join": q_range_join,
-        "q_frame_sample": q_frame_sample,
-        "q_agg_per_order": q_agg_per_order,
-        "q_cosine_topk": q_cosine_topk,
-        "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "q_scd2_dim": q_scd2_dim,
-        "q_funnel_steps": q_funnel_steps,
-        "q_cohort_retention": q_cohort_retention,
-        "q_quota_sample": q_quota_sample,
-        "q_ann_ivf_learned": q_ann_ivf_learned,
-        "q_ann_hnsw_routed": q_ann_hnsw_routed,
-        "q_resample_fill": q_resample_fill,
-        "q_readmission_gap": q_readmission_gap,
-        "q_grouped_percentiles": q_grouped_percentiles,
-        "q_repeated_spans": q_repeated_spans,
-        "q_calendar_dim": q_calendar_dim,
-        "q_stream_dedup_dual": q_stream_dedup_dual,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_anti_new_dates": q_anti_new_dates,
-    }
-    oracles = {
-        **registered_oracles(),
-        "q_simhash_pairs": SQL_SIMHASH_PAIRS,
-        "q_anti_new_dates": SQL_ANTI_NEW_DATES,
-        "q_minhash_lsh_pairs": SQL_MINHASH_LSH_PAIRS,
-        "q_scd2_dim": SQL_SCD2_DIM,
-        "q_sentinel_timestamps": SQL_SENTINEL_TIMESTAMPS,
-        "q_paragraph_dedup": SQL_PARAGRAPH_DEDUP,
-        "q_range_join": SQL_RANGE_JOIN,
-        "q_frame_sample": SQL_FRAME_SAMPLE,
-        "q_agg_per_order": SQL_AGG_PER_ORDER,
-        "q_cosine_topk": SQL_COSINE_TOPK,
-        "q_funnel_steps": SQL_FUNNEL_STEPS,
-        "q_cohort_retention": SQL_COHORT_RETENTION,
-        "q_quota_sample": SQL_QUOTA_SAMPLE,
-        "q_resample_fill": SQL_RESAMPLE_FILL,
-        "q_readmission_gap": SQL_READMISSION_GAP,
-        "q_grouped_percentiles": SQL_GROUPED_PERCENTILES,
-        "q_repeated_spans": SQL_REPEATED_SPANS,
-        "q_calendar_dim": SQL_CALENDAR_DIM,
-        "q_stream_dedup_dual": SQL_STREAM_DEDUP_DUAL,
-    }
+    queries, oracles = catalog_queries(), catalog_oracles()
     rows = []
     for name in names:
         fn = queries[name]

@@ -37,7 +37,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from clinical_data_warehouse_bi_spark.registry import registered_queries
+from clinical_data_warehouse_bi_spark.registry import (
+    catalog_oracles,
+    catalog_queries,
+    names_with,
+)
 from clinical_data_warehouse_bi_spark.session import get_spark
 
 BASE = "/root/testdata/sf0.1"
@@ -58,20 +62,6 @@ SHIFT_KEYS = {
     "documents": ["doc_id"],
     "embeddings": ["vec_id"],
 }
-
-DEFAULT_QUERIES = [
-    "q_agg_per_order",
-    "q_pricing_summary",
-    "q_join_lookup_cast",
-    "q_asof_next_order",
-    "q_corpus_clean",
-    "q_minhash_lsh_pairs",
-    "q_chunk_dedup",
-    "q_lm_perplexity",
-    "q_cosine_topk",
-    "q_funnel_steps",
-]
-
 
 def replicate(spark, factor: int) -> str:
     out = f"{OUT}_{factor}x"
@@ -238,7 +228,7 @@ def main() -> None:
     with_duckdb = "--duckdb" in sys.argv[1:]
     planted = "--planted" in sys.argv[1:]
     factor = int(argv[0]) if argv else 16
-    names = argv[1:] or DEFAULT_QUERIES
+    names = argv[1:] or names_with("scale")
     spark = get_spark("bench-scaling")
     from clinical_data_warehouse_bi_spark.io import (
         release_new_persistent_rdds,
@@ -253,74 +243,7 @@ def main() -> None:
         big_dir = replicate_planted(spark, factor)
     else:
         big_dir = replicate(spark, factor)
-    # registry-retired operators remain probe-able via direct import
-    # (the bench.py convention)
-    from clinical_data_warehouse_bi_spark.queries.core import (
-        q_agg_per_order,
-        q_approx_stats,
-        q_calendar_dim,
-        q_sentinel_timestamps,
-    )
-    from clinical_data_warehouse_bi_spark.queries.dedup import (
-        q_chunk_dedup,
-        q_minhash_lsh_pairs,
-        q_paragraph_dedup,
-        q_simhash_pairs,
-    )
-    from clinical_data_warehouse_bi_spark.queries.join_ops import (
-        q_anti_new_dates,
-    )
-    from clinical_data_warehouse_bi_spark.queries.join_ops import q_range_join
-    from clinical_data_warehouse_bi_spark.queries.similarity import (
-        q_ann_ivf_learned,
-        q_cosine_topk,
-    )
-    from clinical_data_warehouse_bi_spark.queries.text_ops import q_quota_sample
-    from clinical_data_warehouse_bi_spark.queries.core import (
-        q_grouped_percentiles,
-    )
-    from clinical_data_warehouse_bi_spark.queries.dedup import (
-        q_repeated_spans,
-    )
-    from clinical_data_warehouse_bi_spark.queries.join_ops import (
-        q_scalar_lookup_default,
-    )
-    from clinical_data_warehouse_bi_spark.queries.windows import (
-        q_cohort_retention,
-        q_frame_sample,
-        q_funnel_steps,
-        q_readmission_gap,
-        q_resample_fill,
-        q_scd2_dim,
-        q_stream_dedup_dual,
-    )
-
-    queries = {
-        **registered_queries(),
-        "q_chunk_dedup": q_chunk_dedup,
-        "q_paragraph_dedup": q_paragraph_dedup,
-        "q_approx_stats": q_approx_stats,
-        "q_sentinel_timestamps": q_sentinel_timestamps,
-        "q_range_join": q_range_join,
-        "q_frame_sample": q_frame_sample,
-        "q_agg_per_order": q_agg_per_order,
-        "q_cosine_topk": q_cosine_topk,
-        "q_minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "q_scd2_dim": q_scd2_dim,
-        "q_funnel_steps": q_funnel_steps,
-        "q_cohort_retention": q_cohort_retention,
-        "q_quota_sample": q_quota_sample,
-        "q_ann_ivf_learned": q_ann_ivf_learned,
-        "q_resample_fill": q_resample_fill,
-        "q_readmission_gap": q_readmission_gap,
-        "q_grouped_percentiles": q_grouped_percentiles,
-        "q_repeated_spans": q_repeated_spans,
-        "q_calendar_dim": q_calendar_dim,
-        "q_stream_dedup_dual": q_stream_dedup_dual,
-        "q_scalar_lookup_default": q_scalar_lookup_default,
-        "q_simhash_pairs": q_simhash_pairs,
-        "q_anti_new_dates": q_anti_new_dates,
-    }
+    queries = catalog_queries()
 
     # winnow-knob variants of the registered exact form (no SQL twin:
     # winnowing trades guaranteed-match length L+w-1 for a w-fold
@@ -348,71 +271,7 @@ def main() -> None:
     oracles = {}
     cons = {}
     if with_duckdb:
-        from clinical_data_warehouse_bi_spark.queries.core import (
-            SQL_AGG_PER_ORDER,
-            SQL_SENTINEL_TIMESTAMPS,
-        )
-        from clinical_data_warehouse_bi_spark.queries.dedup import (
-            SQL_MINHASH_LSH_PAIRS,
-            SQL_PARAGRAPH_DEDUP,
-            SQL_SIMHASH_PAIRS,
-        )
-        from clinical_data_warehouse_bi_spark.queries.join_ops import (
-            SQL_ANTI_NEW_DATES,
-        )
-        from clinical_data_warehouse_bi_spark.queries.join_ops import (
-            SQL_RANGE_JOIN,
-        )
-        from clinical_data_warehouse_bi_spark.queries.similarity import (
-            SQL_COSINE_TOPK,
-        )
-        from clinical_data_warehouse_bi_spark.queries.text_ops import (
-            SQL_QUOTA_SAMPLE,
-        )
-        from clinical_data_warehouse_bi_spark.queries.core import (
-            SQL_CALENDAR_DIM,
-            SQL_GROUPED_PERCENTILES,
-        )
-        from clinical_data_warehouse_bi_spark.queries.join_ops import (
-            SQL_SCALAR_LOOKUP_DEFAULT,
-        )
-        from clinical_data_warehouse_bi_spark.queries.dedup import (
-            SQL_REPEATED_SPANS,
-        )
-        from clinical_data_warehouse_bi_spark.queries.windows import (
-            SQL_COHORT_RETENTION,
-            SQL_FRAME_SAMPLE,
-            SQL_FUNNEL_STEPS,
-            SQL_READMISSION_GAP,
-            SQL_RESAMPLE_FILL,
-            SQL_SCD2_DIM,
-            SQL_STREAM_DEDUP_DUAL,
-        )
-        from clinical_data_warehouse_bi_spark.registry import registered_oracles
-
-        oracles = {
-            **registered_oracles(),
-            "q_minhash_lsh_pairs": SQL_MINHASH_LSH_PAIRS,
-            "q_scd2_dim": SQL_SCD2_DIM,
-            "q_sentinel_timestamps": SQL_SENTINEL_TIMESTAMPS,
-            "q_paragraph_dedup": SQL_PARAGRAPH_DEDUP,
-            "q_range_join": SQL_RANGE_JOIN,
-            "q_frame_sample": SQL_FRAME_SAMPLE,
-            "q_agg_per_order": SQL_AGG_PER_ORDER,
-            "q_cosine_topk": SQL_COSINE_TOPK,
-            "q_funnel_steps": SQL_FUNNEL_STEPS,
-            "q_cohort_retention": SQL_COHORT_RETENTION,
-            "q_quota_sample": SQL_QUOTA_SAMPLE,
-            "q_resample_fill": SQL_RESAMPLE_FILL,
-            "q_readmission_gap": SQL_READMISSION_GAP,
-            "q_calendar_dim": SQL_CALENDAR_DIM,
-            "q_stream_dedup_dual": SQL_STREAM_DEDUP_DUAL,
-            "q_scalar_lookup_default": SQL_SCALAR_LOOKUP_DEFAULT,
-            "q_grouped_percentiles": SQL_GROUPED_PERCENTILES,
-            "q_repeated_spans": SQL_REPEATED_SPANS,
-            "q_simhash_pairs": SQL_SIMHASH_PAIRS,
-            "q_anti_new_dates": SQL_ANTI_NEW_DATES,
-        }
+        oracles = catalog_oracles()
         cons = {BASE: duck_con_for(BASE), big_dir: duck_con_for(big_dir)}
 
     baseline = snapshot_persistent_rdds(spark)

@@ -1,9 +1,11 @@
 """Local mirror of the driver's t2 correctness gate.
 
-Runs every registered query on Spark and its oracle on DuckDB at the
-given sf dir, then compares row count, sorted column names, and an
-order-insensitive stringified row multiset (strictly at least as
-strict as the driver's value-hash).
+Runs every query the driver's gate emits this round on Spark and its
+oracle on DuckDB at the given sf dir, then compares row count, sorted
+column names, and an order-insensitive stringified row multiset
+(strictly at least as strict as the driver's value-hash). Named
+queries resolve through the whole catalog, so any retiree can be
+checked by name.
 
 Usage: python scripts/check_parity.py [sf_dir] [query ...]
 """
@@ -20,7 +22,12 @@ import duckdb
 import pandas as pd
 
 from clinical_data_warehouse_bi_spark.io import DRIVER_TABLES
-from clinical_data_warehouse_bi_spark.registry import all_oracles, all_queries
+from clinical_data_warehouse_bi_spark.registry import (
+    all_oracles,
+    all_queries,
+    catalog_oracles,
+    catalog_queries,
+)
 from clinical_data_warehouse_bi_spark.session import get_spark
 
 
@@ -56,14 +63,17 @@ def normalize(df: pd.DataFrame) -> tuple[list[str], list[tuple]]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    queries, oracles = all_queries(), all_oracles()
+    only = sys.argv[2:]
+    if only:
+        catalog = catalog_queries()
+        queries = {n: catalog[n] for n in only}
+        oracles = catalog_oracles()
+    else:
+        queries, oracles = all_queries(), all_oracles()
     spark = get_spark("parity-check")
     con = duck_con(sf_dir)
     failed = []
     for name, fn in queries.items():
-        if only and name not in only:
-            continue
         t0 = time.time()
         try:
             spark_df = fn(spark, sf_dir).toPandas()
@@ -98,7 +108,7 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"PASS {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
-    print(f"\n{len(failed)} failed of {len([n for n in queries if not only or n in only])}")
+    print(f"\n{len(failed)} failed of {len(queries)}")
     if failed:
         print("failed:", ", ".join(failed))
     return 1 if failed else 0

@@ -1,5 +1,6 @@
-"""Physical-plan audit for registered queries: the facts a human
-checks by eye before shipping a plan to a 1000-executor cluster —
+"""Physical-plan audit for any catalog query (gate or retired): the
+facts a human checks by eye before shipping a plan to a
+1000-executor cluster —
 exchange count and keys, join strategies, top-k form, pushdown,
 codegen span count. Prints one summary row per query plus the
 formatted plan when --full is given.
@@ -17,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from clinical_data_warehouse_bi_spark.registry import auditable_queries
+from clinical_data_warehouse_bi_spark.registry import catalog_queries
 from clinical_data_warehouse_bi_spark.session import get_spark
 
 
@@ -56,7 +57,7 @@ def main() -> None:
     sf_dir = args[0] if args and args[0].startswith("/") else "/root/testdata/sf0.01"
     names = [a for a in args if a.startswith("q_")]
     spark = get_spark("plan-audit")
-    queries = auditable_queries()
+    queries = catalog_queries()
     for name in names:
         a = audit(queries[name](spark, sf_dir))
         print(

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clinical_data_warehouse_bi_spark.io import fan_out, read_table
-from clinical_data_warehouse_bi_spark.registry import registered_queries
+from clinical_data_warehouse_bi_spark.registry import catalog_queries
 
 
 def physical_plan(df) -> str:
@@ -24,48 +24,14 @@ def optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-# rotation-independent: plan locks cover every registered operator
-# regardless of which 50 the driver gate samples this round
-QUERIES = registered_queries()
-
-# registry-retired in rounds 9-11; their plan contracts stay locked here
-from clinical_data_warehouse_bi_spark.queries.core import (  # noqa: E402
-    q_agg_per_order,
-    q_grouped_percentiles,
-)
-from clinical_data_warehouse_bi_spark.queries.dedup import (  # noqa: E402
-    q_paragraph_dedup,
-    q_repeated_spans,
-)
-from clinical_data_warehouse_bi_spark.queries.join_ops import q_range_join  # noqa: E402
-from clinical_data_warehouse_bi_spark.queries.similarity import q_cosine_topk  # noqa: E402
-from clinical_data_warehouse_bi_spark.queries.windows import (  # noqa: E402
-    q_cohort_retention,
-    q_readmission_gap,
-    q_resample_fill,
-    q_scd2_dim,
-)
-
-QUERIES = {
-    **QUERIES,
-    "q_paragraph_dedup": q_paragraph_dedup,
-    "q_range_join": q_range_join,
-    "q_agg_per_order": q_agg_per_order,
-    "q_cosine_topk": q_cosine_topk,
-    "q_scd2_dim": q_scd2_dim,
-    "q_cohort_retention": q_cohort_retention,
-    "q_resample_fill": q_resample_fill,
-    "q_readmission_gap": q_readmission_gap,
-    "q_grouped_percentiles": q_grouped_percentiles,
-    "q_repeated_spans": q_repeated_spans,
-}
+# plan locks cover every catalog query, gate or retired, regardless of
+# which 50 the driver gate samples this round
+QUERIES = catalog_queries()
 
 
 def test_keyword_filter_pushdown(spark, sf_dir):
     """P3: the OR-LIKE predicate must reach the parquet scan."""
-    from clinical_data_warehouse_bi_spark.queries.core import q_keyword_filter
-
-    plan = physical_plan(q_keyword_filter(spark, sf_dir))
+    plan = physical_plan(QUERIES["q_keyword_filter"](spark, sf_dir))
     assert "PushedFilters" in plan
     # column pruning: only the 3 selected columns in ReadSchema
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
@@ -114,11 +80,12 @@ def test_doc_pipeline_aggregates_in_place(spark, sf_dir):
     repartition exchange (exactly one exchange in the whole plan).
     Cache cleared first: a prior q_simhash_pairs run persists the
     fingerprint relation, which would collapse this plan to an
-    InMemoryTableScan and hide the shape under test."""
-    spark.catalog.clearCache()
-    from clinical_data_warehouse_bi_spark.queries.dedup import q_simhash
+    InMemoryTableScan and hide the shape under test. q_simhash is the
+    fingerprint stage of q_simhash_pairs, not a catalog query."""
+    from clinical_data_warehouse_bi_spark.queries import dedup
 
-    plan = physical_plan(q_simhash(spark, sf_dir))
+    spark.catalog.clearCache()
+    plan = physical_plan(dedup.q_simhash(spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
 
 
@@ -153,14 +120,10 @@ def test_scan_prunes_columns(spark, sf_dir):
 
 def test_semi_join_for_integrity_cleanup(spark, sf_dir):
     """J10: orphan cleanup must plan a semi join (never materialize
-    dim columns onto the fact). Imported directly: q_semi_valid_fact
-    retired from the registry in round 8 (full oracle lives in
-    test_retired_parity.py); the plan shape stays locked here."""
-    from clinical_data_warehouse_bi_spark.queries.join_ops import (
-        q_semi_valid_fact,
-    )
-
-    plan = physical_plan(q_semi_valid_fact(spark, sf_dir))
+    dim columns onto the fact). q_semi_valid_fact retired from the
+    gate in round 8 (full oracle lives in test_retired_parity.py);
+    the plan shape stays locked here."""
+    plan = physical_plan(QUERIES["q_semi_valid_fact"](spark, sf_dir))
     assert "LeftSemi" in plan
 
 
@@ -342,11 +305,7 @@ def test_ann_ivf_nprobe_no_cartesian(spark, sf_dir):
     """IVF assignment is a broadcast-matrix GEMM, not a centroid
     crossJoin: no cartesian/nested-loop operator anywhere, candidate
     scoring in an Arrow stage, bucket join as a hash join."""
-    from clinical_data_warehouse_bi_spark.queries.similarity import (
-        q_ann_ivf_nprobe,
-    )
-
-    plan = physical_plan(q_ann_ivf_nprobe(spark, sf_dir))
+    plan = physical_plan(QUERIES["q_ann_ivf_nprobe"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "MapInPandas" in plan
@@ -399,11 +358,9 @@ def test_chunk_dedup_text_never_shuffles(spark, sf_dir):
     it exists to parallelize the tokenizer on a one-row-group local
     scan and is a proven no-op on real multi-split scans —
     test_fan_out_noop_when_well_split.)"""
-    from clinical_data_warehouse_bi_spark.queries.dedup import q_chunk_dedup
-
     blocks = [
         b
-        for b in _exchange_blocks(q_chunk_dedup(spark, sf_dir))
+        for b in _exchange_blocks(QUERIES["q_chunk_dedup"](spark, sf_dir))
         if "RoundRobinPartitioning" not in b
     ]
     assert blocks, "expected at least one keyed exchange (keep-first window)"
@@ -425,9 +382,7 @@ def test_dup_probe_is_take_ordered(spark, sf_dir):
     """O1: ORDER BY + LIMIT must plan as TakeOrderedAndProject
     (per-partition top-k + k-row merge), never a global sort — the
     plan witness for the registry-retired q_dup_probe."""
-    from clinical_data_warehouse_bi_spark.queries.core import q_dup_probe
-
-    plan = physical_plan(q_dup_probe(spark, sf_dir))
+    plan = physical_plan(QUERIES["q_dup_probe"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert "Sort [" not in plan.split("TakeOrderedAndProject")[0]
 
@@ -437,11 +392,7 @@ def test_lm_perplexity_broadcasts_model_one_doc_exchange(spark, sf_dir):
     relations (no shuffle of the corpus-sized bigram stream onto
     word keys) and pay exchanges only for the model's own counting
     and the per-document mean."""
-    from clinical_data_warehouse_bi_spark.queries.hygiene import (
-        q_lm_perplexity,
-    )
-
-    plan = physical_plan(q_lm_perplexity(spark, sf_dir))
+    plan = physical_plan(QUERIES["q_lm_perplexity"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     # the doc-side bigram stream must never hash-partition on words:
     # every exchange keys on the doc id or on model count keys
@@ -602,12 +553,8 @@ def test_repeat_upsample_is_exchange_free(spark, sf_dir):
     """q_repeat_upsample: the fan-out is a per-row CASE + generated-
     sequence explode — NO exchange of any kind, no window, and the
     scan reads only (doc_id, source)."""
-    from clinical_data_warehouse_bi_spark.queries.text_ops import (
-        q_repeat_upsample,
-    )
-
     plan = (
-        q_repeat_upsample(spark, sf_dir)
+        QUERIES["q_repeat_upsample"](spark, sf_dir)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan, plan
@@ -621,12 +568,8 @@ def test_epoch_shuffle_has_no_single_partition_exchange(spark, sf_dir):
     exchange) but never an Exchange SinglePartition and never a
     Window operator (zip_index_key's offset-cumsum replaces
     ROW_NUMBER() OVER ())."""
-    from clinical_data_warehouse_bi_spark.queries.text_ops import (
-        q_epoch_shuffle,
-    )
-
     plan = (
-        q_epoch_shuffle(spark, sf_dir)
+        QUERIES["q_epoch_shuffle"](spark, sf_dir)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange SinglePartition" not in plan, plan
