@@ -11,9 +11,12 @@ from __future__ import annotations
 
 import contextlib
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+T = TypeVar("T")
 
 #: every table the driver materializes per scale factor (TESTDATA.md)
 DRIVER_TABLES = (
@@ -301,6 +304,38 @@ def write_layer(df: DataFrame, path: str, partition_by: list[str] | None = None)
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+
+
+def run_concurrent_jobs(
+    spark: SparkSession, jobs: dict[str, Callable[[], T]]
+) -> dict[str, T]:
+    """Run independent Spark actions as concurrent jobs: one thread per
+    entry of ``jobs`` (name -> zero-argument callable), returning
+    name -> result once every callable has finished.
+
+    Each callable runs under ``inheritable_thread_target(spark)``, so
+    the caller's local properties (job group and description,
+    scheduler pool) and session tags carry into the worker thread —
+    caller-side cancellation by group or tag reaches these jobs too.
+    The session must be passed: without it PySpark copies the
+    properties but drops the tags (and warns on every call).
+
+    Overlap hides per-job fixed latency (planning, scheduling, the
+    straggler tail of each job's last stage) when the jobs are small;
+    under the default FIFO scheduler the first-submitted job takes the
+    task slots, so large jobs run close to one after another. Every
+    future's result is read, so the first failure (in ``jobs`` order)
+    is raised after all threads have finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in jobs.items()
+        }
+        return {name: f.result() for name, f in futures.items()}
 
 
 def write_training_shards(

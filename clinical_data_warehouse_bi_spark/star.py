@@ -15,7 +15,13 @@ MariaDB's mutable-state idioms become pure recomputes:
 
 Every transform chains lazily inside one Catalyst plan per layer; the
 only materialization barriers are the optional parquet writes between
-layers — exactly the staging/dwh boundaries the reference has.
+tiers — exactly the staging/dwh boundaries the reference has. Within a
+tier the layers are independent (the reference builds each as its own
+CTAS), so run_pipeline writes them as concurrent Spark jobs and
+re-reads each with the schema it was written with; the one barrier is
+between the staging and DWH tiers. Concurrency hides per-job fixed
+latency at small scale, and under the FIFO scheduler large writes run
+close to one after another, as they would sequentially.
 
 Scale notes: concept/junk/date dims are broadcast in every fact
 lookup. The interval joins key on (patient_id, admission_id) — the
@@ -25,9 +31,12 @@ admission skew typical of clinical data.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clinical_data_warehouse_bi_spark import io
 from clinical_data_warehouse_bi_spark.cleanse import (
     NUMERIC_RE,
     keyword_filter,
@@ -143,11 +152,11 @@ def build_staging(
         )
     else:
         # scale path: keyed below TOGETHER with dim_concepts — the two
-        # zip_index_key stats jobs are independent, so they overlap in
-        # a 2-thread pool (round-16, guide-style job overlap: each
-        # call's result is a pure function of its own checkpointed
-        # input, threading only hides the second job's latency behind
-        # the first's straggler tail; measured 0.99 -> 0.75 s for the
+        # zip_index_key stats jobs are independent, so they run as
+        # concurrent jobs through io.run_concurrent_jobs (each call's
+        # result is a pure function of its own checkpointed input;
+        # overlap only hides the second job's latency behind the
+        # first's straggler tail — measured 0.99 -> 0.75 s for the
         # pair at the bench fixture scale, outputs identical)
         dim_provider = None
     if dim_provider is not None:
@@ -205,30 +214,20 @@ def build_staging(
         # the natural key (code), so any consistent dense id works.
         # Both dim key builds run here, overlapped (see dim_provider
         # note above).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
-        # inheritable_thread_target copies this thread's JVM-local
-        # properties (job group/description, scheduler pool) into the
-        # worker threads — under pinned-thread mode a plain pool
-        # thread would not inherit them, so caller-side job
-        # cancellation or pool tagging would miss these two jobs
-        # (round-16 advice)
-        with ThreadPoolExecutor(max_workers=2) as _pool:
-            _f_prov = _pool.submit(
-                inheritable_thread_target(zip_index_key),
-                prov_base, "provider_id",
-            )
-            _f_conc = _pool.submit(
-                inheritable_thread_target(zip_index_key),
-                concept_base, "clinical_concept_id",
-            )
-            dim_provider = _f_prov.result().select(
-                "provider_id", "patient_id", "admission_id",
-                "careunit_id", "intime", "outtime",
-            )
-            dim_concepts = _f_conc.result()
+        keyed = io.run_concurrent_jobs(
+            spark,
+            {
+                "dim_provider": lambda: zip_index_key(prov_base, "provider_id"),
+                "dim_concepts": lambda: zip_index_key(
+                    concept_base, "clinical_concept_id"
+                ),
+            },
+        )
+        dim_provider = keyed["dim_provider"].select(
+            "provider_id", "patient_id", "admission_id",
+            "careunit_id", "intime", "outtime",
+        )
+        dim_concepts = keyed["dim_concepts"]
     dim_concepts = dim_concepts.drop("__batch").select(
         "clinical_concept_id", "concept_type", "concept_name", "code", "description"
     )
@@ -667,6 +666,34 @@ def build_dwh(
     }
 
 
+def _write_tier(layers: dict[str, DataFrame], root: str, write) -> None:
+    """Write one tier's layers to ``root/<name>`` as concurrent Spark
+    jobs (``write(name, df, path)`` per layer) and replace each entry
+    of ``layers`` IN PLACE with its parquet re-read — in place so
+    build_staging's _StageDict provenance marker survives. The re-read
+    pins the schema of the DataFrame just written: without it every
+    ``spark.read.parquet`` runs a one-task schema-inference job. The
+    pinned read's schema equals the inferred one (file sources read
+    every column as nullable, and a partition column moves to the end
+    either way)."""
+    spark = next(iter(layers.values())).sparkSession
+
+    def write_and_reread(name: str, df: DataFrame) -> DataFrame:
+        path = f"{root}/{name}"
+        write(name, df, path)
+        return spark.read.schema(df.schema).parquet(path)
+
+    layers.update(
+        io.run_concurrent_jobs(
+            spark,
+            {
+                name: functools.partial(write_and_reread, name, df)
+                for name, df in layers.items()
+            },
+        )
+    )
+
+
 def run_pipeline(
     src: dict[str, DataFrame],
     out_dir: str | None = None,
@@ -676,6 +703,15 @@ def run_pipeline(
 ) -> dict[str, dict[str, DataFrame]]:
     """staging -> dwh (-> parquet layers when out_dir given — the
     reference's database-per-layer materialization barriers).
+
+    With ``out_dir``, each tier's layers are written as concurrent
+    Spark jobs (all 8 staging layers at once, then all 8 DWH layers)
+    and re-read with the schema they were written with; the DWH build
+    starts only after every staging layer is written — the one barrier
+    the reference's Stage_area.sql -> DWH.sql boundary implies. At
+    small scale the overlap hides per-job fixed latency; at large
+    scale the FIFO scheduler gives the first-submitted job the task
+    slots, so the writes run close to sequentially.
 
     ``zorder_fact`` switches the DWH fact's physical layout from
     hive-partitioning on event_source_type to Z-order clustering on
@@ -690,36 +726,35 @@ def run_pipeline(
     partitions, parquet_block_bytes, normalize)."""
     stage = build_staging(src, parity_keys=parity_keys)
     if out_dir:
-        from clinical_data_warehouse_bi_spark.io import write_layer
-
-        spark = next(iter(src.values())).sparkSession
-        for name, df in stage.items():
-            write_layer(df, f"{out_dir}/stage_area/{name}")
-            stage[name] = spark.read.parquet(f"{out_dir}/stage_area/{name}")
+        _write_tier(
+            stage,
+            f"{out_dir}/stage_area",
+            lambda name, df, path: io.write_layer(df, path),
+        )
     dwh = build_dwh(stage, parity_keys=parity_keys)
     if out_dir:
-        from clinical_data_warehouse_bi_spark.io import write_layer
-
-        spark = next(iter(src.values())).sparkSession
-        for name, df in dwh.items():
+        def write_dwh(name: str, df: DataFrame, path: str) -> None:
             # the fact layer is partitioned by source type — the Spark
             # replacement for the reference's fact indexes
             # (DWH.sql:193-198): partition pruning serves the
             # per-source BI slices, parquet min/max stats serve the
             # key/range probes
-            if name == "fact_disorder_events" and zorder_fact:
+            if name != "fact_disorder_events":
+                io.write_layer(df, path)
+            elif zorder_fact:
                 from clinical_data_warehouse_bi_spark.layout import write_zordered
 
+                # write_zordered pins outputTimestampType session-wide
+                # while it writes: a sibling layer written meanwhile may
+                # store INT64 micros instead of INT96 — same values read
                 write_zordered(
                     df,
-                    f"{out_dir}/dwh/{name}",
+                    path,
                     ["admission_id", "event_datetime"],
                     **(zorder_opts or {}),
                 )
             else:
-                partition_by = (
-                    ["event_source_type"] if name == "fact_disorder_events" else None
-                )
-                write_layer(df, f"{out_dir}/dwh/{name}", partition_by=partition_by)
-            dwh[name] = spark.read.parquet(f"{out_dir}/dwh/{name}")
+                io.write_layer(df, path, partition_by=["event_source_type"])
+
+        _write_tier(dwh, f"{out_dir}/dwh", write_dwh)
     return {"stage": stage, "dwh": dwh}

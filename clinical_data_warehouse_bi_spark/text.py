@@ -1182,7 +1182,8 @@ def top_ngrams(
             )
             .mapInPandas(
                 _ngram_recovery(n, h1s),
-                "__id long, ngram string, h1 long, h2 long",
+                f"__id {docs.schema[id_col].dataType.simpleString()}, "
+                "ngram string, h1 long, h2 long",
             )
             .join(F.broadcast(cand), ["h1", "h2"])
             .groupBy("ngram")

@@ -577,3 +577,48 @@ def test_mix_keeps_sources_with_tiny_rates(spark):
     assert sum(1 for _, s in rows if s == 2) == 200
     again = mix_sources([(df, 1e-7), (df, 0.0), (df, 1.0)], "doc_id", seed=3)
     assert {(r["doc_id"], r["__source"]) for r in again.collect()} == rows
+
+
+def test_run_concurrent_jobs_inherits_tags_and_job_group(spark):
+    """Each callable runs on its own worker thread yet sees the
+    caller's session tags and job group (so interruptTag / group
+    cancellation reach its jobs), returns under its own name, and
+    the session is passed to inheritable_thread_target (no
+    'Tags will not be inherited' warning)."""
+    import threading
+    import warnings
+
+    from clinical_data_warehouse_bi_spark.io import run_concurrent_jobs
+
+    sc = spark.sparkContext
+    caller = threading.get_ident()
+
+    def probe(i):
+        def run():
+            return (
+                threading.get_ident() != caller,
+                set(spark.getTags()),
+                sc.getLocalProperty("spark.jobGroup.id"),
+                spark.range(i + 1).count(),
+            )
+
+        return run
+
+    spark.addTag("concurrent-jobs-tag")
+    sc.setJobGroup("concurrent-jobs-group", "helper test")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", UserWarning)
+            out = run_concurrent_jobs(spark, {f"j{i}": probe(i) for i in range(3)})
+    finally:
+        spark.removeTag("concurrent-jobs-tag")
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sorted(out) == ["j0", "j1", "j2"]
+    for i in range(3):
+        on_worker, tags, group, n = out[f"j{i}"]
+        assert on_worker
+        assert "concurrent-jobs-tag" in tags
+        assert group == "concurrent-jobs-group"
+        assert n == i + 1

@@ -2034,6 +2034,24 @@ def test_top_ngrams_edges(spark):
         T2.top_ngrams(short, n=0, k=3)
 
 
+def test_top_ngrams_string_doc_ids(spark):
+    """The recovery pass carries doc ids through mapInPandas in the
+    id column's own type: string ids give the same report as long
+    ids (a pinned long schema failed the Arrow conversion)."""
+    from clinical_data_warehouse_bi_spark import text as T2
+
+    texts = ["a b c a b c", "a b c d", "b c d e", "x y z a b c"]
+    by_long = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    by_str = spark.createDataFrame(
+        [(f"doc-{i}", t) for i, t in enumerate(texts)], "doc_id string, text string"
+    )
+    want = sorted(map(tuple, T2.top_ngrams(by_long, n=2, k=4).collect()))
+    got = sorted(map(tuple, T2.top_ngrams(by_str, n=2, k=4).collect()))
+    assert got == want and len(got) == 4
+
+
 # ------------------------------------------------ benford_profile
 
 

@@ -162,6 +162,35 @@ def test_materialized_layers_partition_fact(spark, tmp_path_factory):
     )
 
 
+def test_written_layers_reread_with_pinned_schema(spark, tmp_path_factory):
+    """run_pipeline(out_dir=...) writes each tier's layers as
+    concurrent jobs and re-reads them with the writer's schema: every
+    returned layer must equal a fresh schema-inferring read of its
+    directory (schema, row count, order-free row hash), and the stage
+    dict must keep build_staging's provenance marker (a fresh plain
+    dict would send build_dwh down its full-probe path)."""
+    out_dir = str(tmp_path_factory.mktemp("pinned_layers"))
+    r = star.run_pipeline(make_sources(spark, n_patients=200), out_dir=out_dir)
+    assert getattr(r["stage"], "_from_build_staging", False)
+
+    def row_hash(df):
+        return tuple(
+            df.select(F.xxhash64(*df.columns).alias("rh"))
+            .agg(F.expr("bit_xor(rh)"), F.count("*"))
+            .first()
+        )
+
+    tiers = {"stage": "stage_area", "dwh": "dwh"}
+    assert {t: len(r[t]) for t in tiers} == {"stage": 8, "dwh": 8}
+    for tier, sub in tiers.items():
+        for name, df in r[tier].items():
+            fresh = spark.read.parquet(f"{out_dir}/{sub}/{name}")
+            assert df.schema == fresh.schema, (tier, name)
+            h = row_hash(df)
+            assert h[1] > 0, (tier, name)
+            assert h == row_hash(fresh), (tier, name)
+
+
 @pytest.mark.slow
 def test_release_frees_pipeline_checkpoints(spark):
     """A pipeline run pins localCheckpoint RDD blocks that
